@@ -5,7 +5,7 @@
 Run from the repository root. The run boots ``local[nproc]`` Spark,
 builds the workload's inputs from ``--seed``, runs the workload's
 fixed number of untimed warm-up operations, then times operations
-for ``--seconds`` (rounded up to whole operation periods), checking
+for ``--seconds`` (at least one operation), checking
 every operation's outputs outside the timed window. The last line of
 stdout is one JSON object: ``correct``, ``attempted``, ``failed`` and
 ``metrics``, where the metrics are the end-to-end medians with
@@ -35,7 +35,7 @@ import sys  # noqa: E402
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 #: end-to-end metrics besides setup_s; every workload reports all four
-#: (see workloads.py for what each means on each workload)
+#: (README.md gives what each means on each workload)
 E2E = ("resync_p50_s", "lag_p50_s", "commit_p50_s", "sync_p50_s")
 
 # one log4j record at ERROR level, or the first line of a Java / Python
@@ -66,6 +66,18 @@ def _cpu_jiffies() -> tuple[int, int]:
     with open("/proc/stat") as fh:
         vals = [int(v) for v in fh.readline().split()[1:]]
     return vals[7], sum(vals)
+
+
+def _cpu_probe_s() -> float:
+    """Seconds a fixed pure-Python loop takes (best of three): how fast
+    the machine ran single-threaded code around the run, which tells
+    a slow machine from a slow program."""
+    best = float("inf")
+    for _ in range(3):
+        t0 = time.perf_counter()
+        sum(i * i for i in range(300_000))
+        best = min(best, time.perf_counter() - t0)
+    return best
 
 
 def _quartiles(xs: list[float]) -> list[float]:
@@ -119,6 +131,7 @@ def _stop(spark) -> None:
 def run(args, work: str) -> dict:
     nproc = len(os.sched_getaffinity(0))
     steal0, total0 = _cpu_jiffies()
+    probe0 = _cpu_probe_s()
     t_boot = time.perf_counter()
     spark = _boot(work, nproc)
     t_built = time.perf_counter()
@@ -128,6 +141,7 @@ def run(args, work: str) -> dict:
         _stop(spark)
     steal1, total1 = _cpu_jiffies()
     record["cpu_steal_share"] = (steal1 - steal0) / max(1, total1 - total0)
+    record["cpu_probe_s"] = [probe0, _cpu_probe_s()]
     return record
 
 
@@ -163,7 +177,7 @@ def _measure(args, work: str, spark, nproc: int, boot_s: float) -> dict:
     t_measure = time.perf_counter()
     try:
         while (time.perf_counter() - t_measure < args.seconds
-               or len(op_walls) % wl.op_period):
+               or not op_walls):
             if tracer:
                 tracer.begin_op(len(op_walls))
             t0 = time.perf_counter()

@@ -1,12 +1,12 @@
-"""The three closed-loop workloads: seeded inputs, the timed operation,
-and the correctness checks that run outside the timed window.
+"""The closed-loop workloads: seeded inputs, the timed operation, and
+the correctness checks that run outside the timed window.
 
 Each workload is driven by one single-threaded generator. The program
 sees only the generated inputs; the seed fixes every choice the
-generator makes (which tables drift, which tables a mutation touches,
-which keys a commit names). The SHAPE of the work is fixed across
-seeds (drift counts, mutation mix per cycle, commit rotation,
-maintenance cadence), so different seeds give comparable costs.
+generator makes (which tables a mutation touches, which keys a commit
+names). The SHAPE of the work is fixed across seeds (mutation mix per
+cycle, commit rotation, maintenance cadence), so different seeds give
+comparable costs.
 """
 
 from __future__ import annotations
@@ -16,6 +16,7 @@ import hashlib
 import os
 import random
 import shutil
+import statistics
 import time
 
 DB = "wh"
@@ -26,7 +27,7 @@ class CheckFailed(Exception):
 
 
 # ---------------------------------------------------------------------------
-# warehouse generation (shared by warehouse_resync and audit_tail)
+# warehouse generation (audit_tail)
 # ---------------------------------------------------------------------------
 
 
@@ -190,9 +191,6 @@ class Workload:
     name = ""
     #: untimed operations run before timing starts, fixed per workload
     warmup_ops = 0
-    #: the timed operations come in whole multiples of this (a workload
-    #: whose op cost cycles with a period must measure whole periods)
-    op_period = 1
 
     def __init__(self, spark, work: str, seed: int):
         self.spark, self.work, self.seed = spark, work, seed
@@ -211,96 +209,15 @@ class Workload:
         pass
 
 
-class WarehouseResync(Workload):
-    """ReAir's daily batch job: re-sync a whole warehouse into a dest
-    that was synced earlier and has drifted."""
-
-    name = "warehouse_resync"
-    warmup_ops = 3
-    N_TABLES, N_PARTS, N_FILES = 100, 20, 2
-    N_MISSING_TABLES, N_SIZE_DRIFT, N_TLDT_DRIFT, N_STALE = 3, 60, 60, 3
-
-    def build(self) -> None:
-        self.src_root = f"{self.work}/src"
-        self.tpl_root = f"{self.work}/dest_template"
-        self.wh = Warehouse(self.src_root, self.N_TABLES, self.N_PARTS,
-                            self.N_FILES, self.rng)
-        self._build_drifted_template()
-        self.n_runs = 0
-
-    def _build_drifted_template(self) -> None:
-        """The dest as an earlier sync left it, plus seeded drift: a
-        few tables missing, a few partitions whose files changed size,
-        a few whose TLDT alone differs, and stale tables the source no
-        longer has."""
-        from reair_spark.catalog import DirectoryCatalog
-
-        clone_root(self.src_root, self.tpl_root)
-        dest = DirectoryCatalog(self.tpl_root)
-        rng = self.rng
-        tables = list(self.wh.tables)
-        missing = rng.sample(tables, self.N_MISSING_TABLES)
-        for t in missing:
-            dest.drop_table(DB, t)
-            shutil.rmtree(f"{self.tpl_root}/{DB}/{t}")
-        kept = [k for k in self.wh.sizes if k[0] not in missing]
-        drifted = rng.sample(kept, self.N_SIZE_DRIFT + self.N_TLDT_DRIFT)
-        for i, (t, ds) in enumerate(drifted):
-            rec = dest.get_table(DB, t)
-            part = next(p for p in rec["partitions"]
-                        if p["partition_name"] == f"ds={ds}")
-            tldt = int(part["parameters"]["transient_lastDdlTime"])
-            part["parameters"]["transient_lastDdlTime"] = str(tldt - 7)
-            dest.alter_table(rec)
-            if i < self.N_SIZE_DRIFT:
-                loc = part["location"]
-                _write_file(f"{loc}/part-0", self.wh.sizes[(t, ds)][0] + 11,
-                            f"stale/{t}/{ds}")
-        for k in range(self.N_STALE):
-            t = f"stale_{rng.randrange(10**6):06d}"
-            rec = _table_rec(self.tpl_root, t, 5)
-            rec["partitions"] = [_part_rec(self.tpl_root, t, "0000", 6)]
-            dest.create_table(rec)
-            _write_file(f"{self.tpl_root}/{DB}/{t}/ds=0000/part-0", 40, t)
-
-    def op(self) -> dict[str, list[float]]:
-        from reair_spark.replicate import replicate_warehouse
-
-        self.n_runs += 1
-        self.dest_root = f"{self.work}/dest_{self.n_runs}"
-        clone_root(self.tpl_root, self.dest_root)
-        t0 = time.perf_counter()
-        self.out = replicate_warehouse(self.spark, self.src_root,
-                                       self.dest_root)
-        wall = time.perf_counter() - t0
-        # every drifted object waited for the whole call; the commit
-        # is stage 3's wall time as the program reports it
-        return {"resync_p50_s": [wall], "lag_p50_s": [wall],
-                "sync_p50_s": [wall],
-                "commit_p50_s": [self.out["metrics"]["commit"]["wall_s"]]}
-
-    def check(self) -> None:
-        rows = self.out["commit_results"].collect()
-        bad = [r for r in rows if r["status"] != "SUCCESSFUL"]
-        if bad:
-            raise CheckFailed(f"{len(bad)} commits not SUCCESSFUL: {bad[:3]}")
-        expected = (self.N_MISSING_TABLES + self.N_SIZE_DRIFT
-                    + self.N_TLDT_DRIFT + self.N_STALE)
-        changed = [r for r in rows if r["action"] != "NO_OP"]
-        if len(changed) < expected:
-            raise CheckFailed(
-                f"{len(changed)} commits for {expected} drifted objects")
-        check_tables_equal(self.src_root, self.dest_root)
-        self.out["commit_results"].unpersist()
-        shutil.rmtree(self.dest_root)
-
-
 class AuditTail(Workload):
     """A replica keeping up with the audit log: each cycle the
     generator makes audited mutations on the source and the
     incremental loop replicates them."""
 
     name = "audit_tail"
+    # cycle walls on 4 cores run about 24, 12, then 10 s: the first cycle
+    # runs every plan and code path cold. A second warm-up cycle would
+    # cost 11-14 s of a run that already takes about 50 s of the budget.
     warmup_ops = 1
     N_TABLES, N_PARTS, N_FILES = 50, 10, 2
     #: mutations per cycle: add-partition (with data files) dominates
@@ -394,14 +311,16 @@ class AuditTail(Workload):
 
 
 class ZonemapCdf(Workload):
-    """Zone-map table format: a source commit, then a change-feed sync
-    of the dest. Maintenance on a fixed cadence keeps history bounded."""
+    """Zone-map table format: source commits, each followed by a
+    change-feed sync of the dest. One operation is a whole rotation,
+    one commit of each kind, then maintenance of both layouts, so
+    history stays bounded and every operation does the same mix."""
 
     name = "zonemap_cdf"
+    # the first execution of each commit kind and of its sync pays the
+    # JVM's compile cost; one warm-up rotation runs each of them once
     warmup_ops = 1
-    op_period = 3
-    N_ROWS, N_BUCKETS = 30_000, 8
-    MAINTAIN_EVERY = 3
+    N_ROWS, N_BUCKETS = 30_000, 4
     KINDS = ("append", "delete_mor", "upsert_mor")
     STAT_COLS = ["o_orderkey", "o_totalprice"]
 
@@ -426,7 +345,7 @@ class ZonemapCdf(Workload):
         shutil.copytree(self.src, self.dest)
         self.next_key = self.N_ROWS + 1
         self.synced = 0
-        self.cycle = 0
+        self.n_commits = 0
 
     def _commit(self, kind: str) -> int:
         """One source commit of ``kind``; returns its ingest id."""
@@ -439,7 +358,8 @@ class ZonemapCdf(Workload):
             zonemap_upsert_mor,
         )
 
-        rng, salt = self.rng, self.cycle + 1
+        self.n_commits += 1
+        rng, salt = self.rng, self.n_commits
         if kind == "append":
             n = rng.randrange(1500, 2500)
             lo, self.next_key = self.next_key, self.next_key + n
@@ -463,26 +383,32 @@ class ZonemapCdf(Workload):
         from reair_spark.sources import zonemap_maintain
         from reair_spark.streaming import zonemap_cdf_apply
 
-        kind = self.KINDS[self.cycle % len(self.KINDS)]
-        t0 = time.perf_counter()
-        ingest = self._commit(kind)
-        t1 = time.perf_counter()
-        self.applied = zonemap_cdf_apply(self.spark, self.src, self.dest,
-                                         self.synced)
-        t2 = time.perf_counter()
-        self.cycle += 1
-        self.synced = ingest
-        if self.cycle % self.MAINTAIN_EVERY == 0:
-            for loc in (self.src, self.dest):
-                zonemap_maintain(self.spark, loc, fold_at=2, compact_at=6)
-        # a commit's change is visible at the source from its start, so
-        # its lag runs to the dest's convergence
-        return {"resync_p50_s": [t2 - t0], "lag_p50_s": [t2 - t0],
-                "commit_p50_s": [t1 - t0], "sync_p50_s": [t2 - t1]}
+        commits, syncs, self.applied = [], [], []
+        t_start = time.perf_counter()
+        for kind in self.KINDS:
+            t0 = time.perf_counter()
+            ingest = self._commit(kind)
+            t1 = time.perf_counter()
+            self.applied.append(zonemap_cdf_apply(
+                self.spark, self.src, self.dest, self.synced))
+            commits.append(t1 - t0)
+            syncs.append(time.perf_counter() - t1)
+            self.synced = ingest
+        for loc in (self.src, self.dest):
+            zonemap_maintain(self.spark, loc, fold_at=2, compact_at=6)
+        wall = time.perf_counter() - t_start
+        # one sample per rotation: the kinds' mean, so every sample
+        # describes the same mix. A commit's change is visible at the
+        # source from its start, so its lag runs to dest convergence.
+        return {"commit_p50_s": [statistics.fmean(commits)],
+                "sync_p50_s": [statistics.fmean(syncs)],
+                "lag_p50_s": [statistics.fmean(map(sum, zip(commits, syncs)))],
+                "resync_p50_s": [wall]}
 
     def check(self) -> None:
-        if self.applied["n_commits"] != 1:
-            raise CheckFailed(f"apply saw {self.applied['n_commits']} commits")
+        for applied in self.applied:
+            if applied["n_commits"] != 1:
+                raise CheckFailed(f"apply saw {applied['n_commits']} commits")
 
     def finish(self) -> None:
         from collections import Counter
@@ -502,4 +428,4 @@ class ZonemapCdf(Workload):
                 f"{sum(only_dest.values())} only in dest")
 
 
-WORKLOADS = {w.name: w for w in (WarehouseResync, AuditTail, ZonemapCdf)}
+WORKLOADS = {w.name: w for w in (AuditTail, ZonemapCdf)}
